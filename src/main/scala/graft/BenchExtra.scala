@@ -83,7 +83,11 @@ object BenchExtra {
         // (per-batch incremental planning, WAL, state commit) from the
         // operators' own time in the streaming_* queries.
         import org.apache.spark.sql.functions.{col, pmod}
-        val n = args.lift(1).map(_.toInt).getOrElse(5)
+        val n = args.lift(1).map { a =>
+          a.toIntOption.filter(_ >= 1).getOrElse(
+            throw new IllegalArgumentException(
+              s"streamfloor: micro-batch count must be a positive integer, got '$a'"))
+        }.getOrElse(5)
         (1 to runs).foreach { i =>
           val classed = spark.range(1000)
             .withColumn("cls", pmod(col("id"), org.apache.spark.sql.functions

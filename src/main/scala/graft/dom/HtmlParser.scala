@@ -17,17 +17,22 @@ import scala.collection.mutable
   */
 object HtmlParser {
 
-  val voidElements: Set[String] = Set(
+  private def javaSet(names: String*): java.util.HashSet[String] =
+    new java.util.HashSet(java.util.Arrays.asList(names: _*))
+
+  private val voidElements = javaSet(
     "area", "base", "basefont", "br", "col", "embed", "frame", "hr", "img",
     "input", "isindex", "keygen", "link", "meta", "param", "source", "track",
     "wbr")
 
-  /** Content scanned raw until the matching close tag; script/style get no
-    * entity decoding, textarea/title (RCDATA) do. */
-  private val rawText = Set("script", "style")
-  private val rcdata = Set("textarea", "title")
+  def isVoid(tag: String): Boolean = voidElements.contains(tag)
 
-  private val headOnly = Set("title", "base", "link", "meta", "style",
+  /** Content scanned raw until the matching close tag; script/style
+    * ([[Serializer.isRawText]]) get no entity decoding, textarea/title
+    * (RCDATA) do. */
+  private def isRcdata(tag: String): Boolean = tag == "textarea" || tag == "title"
+
+  private val headOnly = javaSet("title", "base", "link", "meta", "style",
     "script", "isindex")
 
   /** Starting any of these closes an open <p> — the HTML4 block set the
@@ -36,10 +41,80 @@ object HtmlParser {
     * unknown inline-ish elements that nest freely inside <p>, and the
     * golden fixtures encode that (slate-000's golden has
     * `<p><article><div…` and `<h2>` nested inside an unclosed `<h1>`). */
-  private val pClosers = Set(
+  private val pClosers = javaSet(
     "address", "blockquote", "center", "dir", "div", "dl", "fieldset",
     "form", "h1", "h2", "h3", "h4", "h5", "h6", "hr", "listing", "menu",
     "noscript", "ol", "p", "pre", "table", "ul", "xmp")
+
+  /** Canonical lower-case tag and attribute names: the parser returns
+    * these instances for names it reads, instead of a fresh lower-cased
+    * substring per name. Open addressing keyed by `String.hashCode` of the
+    * lower-cased name. */
+  private val knownNames: Array[String] = {
+    val names = Seq(
+      // tags
+      "html", "head", "body", "title", "meta", "link", "script", "style",
+      "base", "noscript", "div", "span", "p", "a", "b", "i", "u", "s", "em",
+      "strong", "small", "big", "font", "center", "br", "hr", "img", "ul",
+      "ol", "li", "dl", "dt", "dd", "table", "thead", "tbody", "tfoot", "tr",
+      "td", "th", "caption", "col", "colgroup", "h1", "h2", "h3", "h4", "h5",
+      "h6", "pre", "code", "blockquote", "q", "cite", "abbr", "acronym",
+      "address", "sub", "sup", "tt", "kbd", "samp", "var", "del", "ins",
+      "strike", "nobr", "wbr", "form", "input", "textarea", "select",
+      "option", "optgroup", "button", "label", "fieldset", "legend",
+      "iframe", "frame", "frameset", "embed", "object", "param", "map",
+      "area", "article", "section", "header", "footer", "nav", "aside",
+      "main", "figure", "figcaption", "time", "mark", "svg", "video",
+      "audio", "source", "track", "canvas", "picture", "menu", "dir",
+      // attributes
+      "class", "id", "href", "src", "alt", "name", "content", "rel", "type",
+      "lang", "dir", "target", "width", "height", "align", "valign",
+      "border", "cellpadding", "cellspacing", "colspan", "rowspan",
+      "bgcolor", "color", "background", "action", "method", "value",
+      "charset", "http-equiv", "property", "role", "tabindex", "itemprop",
+      "itemscope", "itemtype", "onclick", "onload", "onmouseover",
+      "onmouseout", "data-src", "srcset", "sizes", "size", "face", "clear",
+      "nowrap", "language", "hspace", "vspace", "frameborder", "scrolling",
+      "allowfullscreen", "datetime", "for", "placeholder", "checked",
+      "selected", "disabled", "usemap", "longdesc", "poster", "xmlns")
+    val t = new Array[String](1024)
+    names.distinct.foreach { n =>
+      var k = n.hashCode & (t.length - 1)
+      while (t(k) != null) k = (k + 1) & (t.length - 1)
+      t(k) = n
+    }
+    t
+  }
+
+  /** `in.substring(from, to).toLowerCase(Locale.ROOT)`, without the copy
+    * when the name is a known one. Non-ASCII names always take the copy:
+    * Unicode lower-casing maps them in ways ASCII folding does not. */
+  private[graft] def lowerName(in: String, from: Int, to: Int): String = {
+    var h = 0
+    var i = from
+    while (i < to) {
+      var c = in.charAt(i)
+      if (c >= 128) return in.substring(from, to).toLowerCase(java.util.Locale.ROOT)
+      if (c >= 'A' && c <= 'Z') c = (c + 32).toChar
+      h = 31 * h + c
+      i += 1
+    }
+    val mask = knownNames.length - 1
+    var k = h & mask
+    while (knownNames(k) != null) {
+      val cand = knownNames(k)
+      if (cand.length == to - from) {
+        var j = 0
+        while (j < cand.length && {
+          val c = in.charAt(from + j)
+          (if (c >= 'A' && c <= 'Z') (c + 32).toChar else c) == cand.charAt(j)
+        }) j += 1
+        if (j == cand.length) return cand
+      }
+      k = (k + 1) & mask
+    }
+    in.substring(from, to).toLowerCase(java.util.Locale.ROOT)
+  }
 
   def parse(html: String): Node = new Parser(html).run()
 
@@ -71,9 +146,9 @@ object HtmlParser {
       while (pos < len) {
         val lt = in.indexOf('<', pos)
         if (lt < 0) {
-          addText(in.substring(pos), atEof = true); pos = len
+          addText(pos, len, atEof = true); pos = len
         } else {
-          if (lt > pos) addText(in.substring(pos, lt))
+          if (lt > pos) addText(pos, lt, atEof = false)
           pos = lt
           parseMarkup()
         }
@@ -85,13 +160,13 @@ object HtmlParser {
 
     private def parseMarkup(): Unit = {
       // pos is at '<'
-      if (pos + 1 >= len) { addText("<"); pos = len; return }
+      if (pos + 1 >= len) { addText(pos, pos + 1, atEof = false); pos = len; return }
       val c = in.charAt(pos + 1)
       if (c == '!') parseDeclaration()
       else if (c == '?') parsePi()
       else if (c == '/') parseEndTag()
       else if (isNameStart(c)) parseStartTag()
-      else { addText("<"); pos += 1 }
+      else { addText(pos, pos + 1, atEof = false); pos += 1 }
     }
 
     private def isNameStart(c: Char): Boolean =
@@ -141,7 +216,7 @@ object HtmlParser {
       }
       val start = i
       while (i < len && isNameChar(in.charAt(i))) i += 1
-      val name = in.substring(start, i).toLowerCase(java.util.Locale.ROOT)
+      val name = lowerName(in, start, i)
       val end = in.indexOf('>', i)
       pos = if (end < 0) len else end + 1
       endTag(name)
@@ -151,8 +226,8 @@ object HtmlParser {
       var i = pos + 1
       val start = i
       while (i < len && isNameChar(in.charAt(i))) i += 1
-      val name = in.substring(start, i).toLowerCase(java.util.Locale.ROOT)
-      var attrPairs: mutable.ArrayBuffer[(String, String)] = null
+      val name = lowerName(in, start, i)
+      nAttrs = 0
       // attribute scanning
       var done = false
       while (!done && i < len) {
@@ -165,7 +240,7 @@ object HtmlParser {
           val ns = i
           while (i < len && !isWs(in.charAt(i)) && in.charAt(i) != '=' &&
             in.charAt(i) != '>' && in.charAt(i) != '/') i += 1
-          val aname = in.substring(ns, i).toLowerCase(java.util.Locale.ROOT)
+          val aname = lowerName(in, ns, i)
           while (i < len && isWs(in.charAt(i))) i += 1
           var avalue = ""
           if (i < len && in.charAt(i) == '=') {
@@ -186,16 +261,39 @@ object HtmlParser {
               }
             }
           }
-          if (aname.nonEmpty) {
-            if (attrPairs == null) attrPairs = new mutable.ArrayBuffer[(String, String)](4)
-            if (!attrPairs.exists(_._1 == aname)) attrPairs += (aname -> avalue)
-          }
+          if (aname.nonEmpty) addAttr(aname, avalue)
         }
       }
       pos = i
-      startTag(name, attrPairs)
-      if (rawText.contains(name)) consumeRawText(name, decodeEntities = false)
-      else if (rcdata.contains(name)) consumeRawText(name, decodeEntities = true)
+      startTag(name)
+      if (Serializer.isRawText(name)) consumeRawText(name, decodeEntities = false)
+      else if (isRcdata(name)) consumeRawText(name, decodeEntities = true)
+    }
+
+    // the current start tag's attributes, in order, first one of each name
+    // kept: keys at even and values at odd indices of `attrBuf`
+    private var attrBuf = new Array[String](8)
+    private var nAttrs = 0
+
+    private def addAttr(k: String, v: String): Unit = {
+      var j = 0
+      while (j < nAttrs) { if (attrBuf(2 * j) == k) return; j += 1 }
+      if (2 * nAttrs + 2 > attrBuf.length)
+        attrBuf = java.util.Arrays.copyOf(attrBuf, attrBuf.length * 2)
+      attrBuf(2 * nAttrs) = k
+      attrBuf(2 * nAttrs + 1) = v
+      nAttrs += 1
+    }
+
+    /** Copy the current tag's attributes onto `n`; with `onlyNew`, keep
+      * the ones `n` already has. */
+    private def setAttrs(n: Node, onlyNew: Boolean): Unit = {
+      var j = 0
+      while (j < nAttrs) {
+        val k = attrBuf(2 * j)
+        if (!onlyNew || n.attr(k) == null) n.setAttr(k, attrBuf(2 * j + 1))
+        j += 1
+      }
     }
 
     /** Scan raw content of script/style/textarea/title up to its close tag. */
@@ -280,10 +378,10 @@ object HtmlParser {
       * double-breaks-expected fixtures encode exactly this (e.g. whitespace
       * between `<br><br>` and `<strong>` vanishes, text after `</h1>` stays).
       */
-    private def dropsBlankRun(raw: String, atEof: Boolean): Boolean = {
-      var i = 0
-      while (i < raw.length) {
-        if (!isBlankCh(raw.charAt(i))) return false
+    private def dropsBlankRun(from: Int, to: Int, atEof: Boolean): Boolean = {
+      var i = from
+      while (i < to) {
+        if (!isBlankCh(in.charAt(i))) return false
         i += 1
       }
       if (atEof) return true
@@ -304,21 +402,24 @@ object HtmlParser {
       }
     }
 
-    private def addText(raw: String, atEof: Boolean = false): Unit = {
-      if (raw.isEmpty) return
+    /** Add the text `in[from, to)`; the string is copied only if kept. */
+    private def addText(from: Int, to: Int, atEof: Boolean): Unit = {
+      if (from >= to) return
       if (!inBody) {
         // whitespace-only text before body is dropped (libxml2 behavior);
         // non-whitespace forces the body open
-        if (raw.forall(isWs)) return
+        var i = from
+        while (i < to && isWs(in.charAt(i))) i += 1
+        if (i == to) return
         ensureBody()
-      } else if (dropsBlankRun(raw, atEof)) return
-      val text = Entities.decode(raw)
+      } else if (dropsBlankRun(from, to, atEof)) return
+      val text = Entities.decode(in.substring(from, to))
       val t = cur
       if (t.children.nonEmpty) {
         val last = t.children(t.children.length - 1)
-        last.tail = (if (last.tail == null) "" else last.tail) + text
+        last.tail = if (last.tail == null) text else last.tail + text
       } else {
-        t.text = (if (t.text == null) "" else t.text) + text
+        t.text = if (t.text == null) text else t.text + text
       }
     }
 
@@ -355,37 +456,29 @@ object HtmlParser {
         stack.remove(stack.length - 1)
     }
 
-    private def startTag(name: String, attrPairs: mutable.ArrayBuffer[(String, String)]): Unit = {
+    private def startTag(name: String): Unit = {
       name match {
         case "html" =>
           ensureRoot()
-          if (attrPairs != null) attrPairs.foreach { case (k, v) =>
-            if (root.attr(k) == null) root.setAttr(k, v)
-          }
+          setAttrs(root, onlyNew = true)
           return
         case "head" =>
-          if (!inBody) { ensureHead(); if (attrPairs != null)
-            attrPairs.foreach { case (k, v) => head.setAttr(k, v) } }
+          if (!inBody) { ensureHead(); setAttrs(head, onlyNew = false) }
           return
         case "body" =>
           ensureBody()
-          if (attrPairs != null) attrPairs.foreach { case (k, v) =>
-            if (body.attr(k) == null) body.setAttr(k, v)
-          }
+          setAttrs(body, onlyNew = true)
           return
         case _ =>
       }
 
       if (!inBody && headOnly.contains(name)) {
         ensureHead()
-        val n = mkNode(name, attrPairs)
+        val n = mkNode(name)
         n.parent = head
         head.children += n
-        if (!voidElements.contains(name)) stack += n
         // raw-text consumption (script/style/title) reads `cur`
-        if (rawText.contains(name) || rcdata.contains(name)) {
-          // handled by caller via consumeRawText; make it the current node
-        }
+        if (!isVoid(name)) stack += n
         return
       }
 
@@ -393,14 +486,14 @@ object HtmlParser {
 
       runAutoClose(name)
 
-      val n = mkNode(name, attrPairs)
+      val n = mkNode(name)
       appendNode(n)
-      if (!voidElements.contains(name)) stack += n
+      if (!isVoid(name)) stack += n
     }
 
-    private def mkNode(name: String, attrPairs: mutable.ArrayBuffer[(String, String)]): Node = {
+    private def mkNode(name: String): Node = {
       val n = new Node(name)
-      if (attrPairs != null) attrPairs.foreach { case (k, v) => n.setAttr(k, v) }
+      setAttrs(n, onlyNew = false)
       n
     }
 

@@ -18,26 +18,58 @@ final class Node(var tag: String) {
   var text: String = null
   var tail: String = null
   var parent: Node = null
-  private var _attrs: mutable.LinkedHashMap[String, String] = null
+  // attributes in insertion order (an update keeps the position, like
+  // lxml's attribute dict): names at even, values at odd indices
+  private var attrKV: Array[String] = null
+  private var nAttrs = 0
   val children = new mutable.ArrayBuffer[Node](4)
 
   def isComment: Boolean = tag == Node.Comment
   def isPi: Boolean = tag == Node.Pi
   def isElement: Boolean = !isComment && !isPi
 
-  def hasAttrs: Boolean = _attrs != null && _attrs.nonEmpty
-  def attrs: mutable.LinkedHashMap[String, String] = {
-    if (_attrs == null) _attrs = mutable.LinkedHashMap.empty
-    _attrs
+  def hasAttrs: Boolean = nAttrs > 0
+  def attrCount: Int = nAttrs
+  def attrName(i: Int): String = attrKV(2 * i)
+  def attrValue(i: Int): String = attrKV(2 * i + 1)
+
+  private def attrIndex(name: String): Int = {
+    var i = 0
+    while (i < nAttrs) {
+      if (attrKV(2 * i) == name) return i
+      i += 1
+    }
+    -1
   }
+
   /** lxml `elem.get(name)` → null when absent. */
-  def attr(name: String): String =
-    if (_attrs == null) null else _attrs.getOrElse(name, null)
+  def attr(name: String): String = {
+    val i = attrIndex(name)
+    if (i < 0) null else attrKV(2 * i + 1)
+  }
   def attrOr(name: String, default: String): String = {
     val v = attr(name); if (v == null) default else v
   }
-  def setAttr(name: String, value: String): Unit = attrs.update(name, value)
-  def removeAttr(name: String): Unit = if (_attrs != null) _attrs.remove(name)
+  def setAttr(name: String, value: String): Unit = {
+    val i = attrIndex(name)
+    if (i >= 0) attrKV(2 * i + 1) = value
+    else {
+      if (attrKV == null) attrKV = new Array[String](4)
+      else if (2 * nAttrs == attrKV.length) attrKV = java.util.Arrays.copyOf(attrKV, 2 * attrKV.length)
+      attrKV(2 * nAttrs) = name
+      attrKV(2 * nAttrs + 1) = value
+      nAttrs += 1
+    }
+  }
+  def removeAttr(name: String): Unit = {
+    val i = attrIndex(name)
+    if (i >= 0) {
+      System.arraycopy(attrKV, 2 * i + 2, attrKV, 2 * i, 2 * (nAttrs - i - 1))
+      nAttrs -= 1
+      attrKV(2 * nAttrs) = null
+      attrKV(2 * nAttrs + 1) = null
+    }
+  }
 
   /** Append, moving the child out of any previous parent (lxml `append`). */
   def append(child: Node): Unit = {
@@ -53,12 +85,20 @@ final class Node(var tag: String) {
     children.insert(index, child)
   }
 
-  def indexOf(child: Node): Int = children.indexOf(child)
+  /** Position of `child` among the children by reference, -1 if absent. */
+  def indexOf(child: Node): Int = {
+    var i = 0
+    while (i < children.length) {
+      if (children(i) eq child) return i
+      i += 1
+    }
+    -1
+  }
 
   /** Detach this node (and its tail) from its parent, if any. */
   def detach(): Unit = {
     if (parent != null) {
-      val i = parent.children.indexOf(this)
+      val i = parent.indexOf(this)
       if (i >= 0) parent.children.remove(i)
       parent = null
     }
@@ -66,7 +106,7 @@ final class Node(var tag: String) {
 
   def prevSibling: Node = {
     if (parent == null) return null
-    val i = parent.children.indexOf(this)
+    val i = parent.indexOf(this)
     if (i > 0) parent.children(i - 1) else null
   }
 
@@ -115,6 +155,25 @@ final class Node(var tag: String) {
     out
   }
 
+  /** [[findAll]] for several tags in one walk: element `i` of the result
+    * holds the descendants tagged `tagNames(i)`, document order. */
+  def findAllByTag(tagNames: Array[String]): Array[mutable.ArrayBuffer[Node]] = {
+    val out = Array.fill(tagNames.length)(new mutable.ArrayBuffer[Node])
+    def walk(n: Node): Unit = {
+      var i = 0
+      while (i < n.children.length) {
+        val c = n.children(i)
+        var k = 0
+        while (k < tagNames.length && c.tag != tagNames(k)) k += 1
+        if (k < tagNames.length) out(k) += c
+        walk(c)
+        i += 1
+      }
+    }
+    walk(this)
+    out
+  }
+
   /** First descendant with the tag, document order (lxml `find('.//t')`). */
   def findFirst(tagName: String): Node = {
     var found: Node = null
@@ -154,14 +213,14 @@ final class Node(var tag: String) {
   /** Following siblings in order (lxml `itersiblings()`). */
   def siblingsAfter: Iterator[Node] = {
     if (parent == null) return Iterator.empty
-    val i = parent.children.indexOf(this)
+    val i = parent.indexOf(this)
     parent.children.iterator.drop(i + 1)
   }
 
   /** Preceding siblings, nearest first (lxml `itersiblings(preceding=True)`). */
   def siblingsBefore: Iterator[Node] = {
     if (parent == null) return Iterator.empty
-    val i = parent.children.indexOf(this)
+    val i = parent.indexOf(this)
     parent.children.take(i).reverseIterator
   }
 

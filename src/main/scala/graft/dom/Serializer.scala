@@ -27,11 +27,9 @@ object Serializer {
     sb.toString
   }
 
-  private val rawText = Set("script", "style")
-
   /** Tags whose text serializes RAW (unescaped) — load-bearing for
     * Extractor.childrenMatchBlockRegex's serialize-equivalence. */
-  def isRawText(tag: String): Boolean = rawText.contains(tag)
+  def isRawText(tag: String): Boolean = tag == "script" || tag == "style"
 
   private def write(n: Node, sb: java.lang.StringBuilder, includeTail: Boolean): Unit = {
     if (n.isComment) {
@@ -40,17 +38,17 @@ object Serializer {
       sb.append("<?").append(if (n.text == null) "" else n.text).append("?>")
     } else {
       sb.append('<').append(n.tag)
-      if (n.hasAttrs) {
-        n.attrs.foreach { case (k, v) =>
-          sb.append(' ').append(k).append("=\"")
-          escapeAttr(v, sb)
-          sb.append('"')
-        }
+      var a = 0
+      while (a < n.attrCount) {
+        sb.append(' ').append(n.attrName(a)).append("=\"")
+        escapeAttr(n.attrValue(a), sb)
+        sb.append('"')
+        a += 1
       }
       sb.append('>')
-      if (!HtmlParser.voidElements.contains(n.tag)) {
+      if (!HtmlParser.isVoid(n.tag)) {
         if (n.text != null) {
-          if (rawText.contains(n.tag)) sb.append(n.text)
+          if (isRawText(n.tag)) sb.append(n.text)
           else escapeText(n.text, sb)
         }
         var i = 0
@@ -64,30 +62,29 @@ object Serializer {
     if (includeTail && n.tail != null) escapeText(n.tail, sb)
   }
 
-  private def escapeText(s: String, sb: java.lang.StringBuilder): Unit = {
+  /** Appends `s` with `&`, `<`, `>` (and `"` when `quote`) escaped; each
+    * run without any of them is appended in one call. */
+  private def escape(s: String, sb: java.lang.StringBuilder, quote: Boolean): Unit = {
+    var from = 0
     var i = 0
     while (i < s.length) {
-      s.charAt(i) match {
-        case '&' => sb.append("&amp;")
-        case '<' => sb.append("&lt;")
-        case '>' => sb.append("&gt;")
-        case c => sb.append(c)
+      val rep = s.charAt(i) match {
+        case '&' => "&amp;"
+        case '<' => "&lt;"
+        case '>' => "&gt;"
+        case '"' if quote => "&quot;"
+        case _ => null
+      }
+      if (rep != null) {
+        sb.append(s, from, i).append(rep)
+        from = i + 1
       }
       i += 1
     }
+    sb.append(s, from, s.length)
   }
 
-  private def escapeAttr(s: String, sb: java.lang.StringBuilder): Unit = {
-    var i = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '&' => sb.append("&amp;")
-        case '<' => sb.append("&lt;")
-        case '>' => sb.append("&gt;")
-        case '"' => sb.append("&quot;")
-        case c => sb.append(c)
-      }
-      i += 1
-    }
-  }
+  private def escapeText(s: String, sb: java.lang.StringBuilder): Unit = escape(s, sb, quote = false)
+
+  private def escapeAttr(s: String, sb: java.lang.StringBuilder): Unit = escape(s, sb, quote = true)
 }

@@ -14,8 +14,6 @@ import graft.dom.Node
   */
 object Cleaners {
 
-  private val killTags = Set("script", "style", "link")
-
   /** In-place P1 clean. Dropped nodes keep their tails (lxml Cleaner uses
     * drop_tree-style removal via `el.drop_tree()`). */
   def cleanHtml(root: Node): Unit = {
@@ -24,7 +22,7 @@ object Cleaners {
       var i = 0
       while (i < n.children.length) {
         val c = n.children(i)
-        if (c.isComment || c.isPi || killTags.contains(c.tag)) {
+        if (c.isComment || c.isPi || c.tag == "script" || c.tag == "style" || c.tag == "link") {
           c.dropTree()
           // child list shrank; re-check same index
         } else {
@@ -40,17 +38,23 @@ object Cleaners {
 
   private def cleanNodeAttrs(n: Node): Unit = {
     if (!n.hasAttrs) return
-    val toRemove = n.attrs.keysIterator.filter { k =>
-      (k.length > 2 && k.startsWith("on")) || k == "style"
-    }.toList
-    toRemove.foreach(n.removeAttr)
-    for (urlAttr <- List("href", "src", "action")) {
-      val v = n.attr(urlAttr)
-      if (v != null) {
-        val t = v.trim.toLowerCase(java.util.Locale.ROOT)
-        if (t.startsWith("javascript:") || t.startsWith("vbscript:"))
-          n.setAttr(urlAttr, "")
-      }
+    var i = n.attrCount - 1
+    while (i >= 0) { // backwards, so a removal keeps the rest in place
+      val k = n.attrName(i)
+      if ((k.length > 2 && k.startsWith("on")) || k == "style") n.removeAttr(k)
+      i -= 1
+    }
+    blankScriptUrl(n, "href")
+    blankScriptUrl(n, "src")
+    blankScriptUrl(n, "action")
+  }
+
+  private def blankScriptUrl(n: Node, urlAttr: String): Unit = {
+    val v = n.attr(urlAttr)
+    if (v != null) {
+      val t = v.trim.toLowerCase(java.util.Locale.ROOT)
+      if (t.startsWith("javascript:") || t.startsWith("vbscript:"))
+        n.setAttr(urlAttr, "")
     }
   }
 
@@ -135,44 +139,59 @@ object Cleaners {
     private var runHasNl = false
     private var inTabSpace = false
 
-    @inline private def isAsciiWs(c: Char): Boolean =
-      c == ' ' || c == '\t' || c == '\n' || c == '\r' || c == '\f' || c == '\u000B'
-
-    private def flushRun(): Unit = {
-      if (runUnits > 0 || runHasNl) {
-        val k = if (runHasNl) 1 else runUnits
-        if (leadingDone) { length += k; trailingWs += k }
-        runUnits = 0
-        runHasNl = false
-        inTabSpace = false
-      }
-    }
-
+    // the state lives in locals for the loop and is stored back after it
     def accept(s: String): Unit = {
       if (s == null) return
+      var len = length
+      var trail = trailingWs
+      var lead = leadingDone
+      var units = runUnits
+      var nl = runHasNl
+      var tabSpace = inTabSpace
+      val n = s.length
       var i = 0
-      while (i < s.length) {
+      while (i < n) {
         val c = s.charAt(i)
-        if (isAsciiWs(c)) {
-          if (c == '\n') { runHasNl = true; inTabSpace = false }
-          else if (c == ' ' || c == '\t') {
-            if (!inTabSpace) { runUnits += 1; inTabSpace = true }
-          } else { // \r \f \x0B pass through individually
-            runUnits += 1
-            inTabSpace = false
-          }
+        if (c == ' ' || c == '\t') {
+          if (!tabSpace) { units += 1; tabSpace = true }
+          i += 1
+        } else if (c > ' ' && c <= '~') { // printable ASCII run: never whitespace
+          if (lead && (units > 0 || nl)) len += (if (nl) 1 else units)
+          units = 0; nl = false; tabSpace = false
+          var j = i + 1
+          while (j < n && { val d = s.charAt(j); d > ' ' && d <= '~' }) j += 1
+          lead = true
+          len += j - i
+          trail = 0
+          i = j
+        } else if (c == '\n') {
+          nl = true; tabSpace = false
+          i += 1
+        } else if (c == '\r' || c == '\f' || c == '\u000B') { // pass through individually
+          units += 1; tabSpace = false
+          i += 1
         } else {
-          flushRun()
-          if (pyIsSpace(c)) { // unicode whitespace: kept by clean, stripped at ends
-            if (leadingDone) { length += 1; trailingWs += 1 }
-          } else {
-            leadingDone = true
-            length += 1
-            trailingWs = 0
+          if (units > 0 || nl) { // the pending ASCII-ws run ends
+            val k = if (nl) 1 else units
+            if (lead) { len += k; trail += k }
+            units = 0; nl = false; tabSpace = false
           }
+          if (pyIsSpace(c)) { // unicode whitespace: kept by clean, stripped at ends
+            if (lead) { len += 1; trail += 1 }
+          } else {
+            lead = true
+            len += 1
+            trail = 0
+          }
+          i += 1
         }
-        i += 1
       }
+      length = len
+      trailingWs = trail
+      leadingDone = lead
+      runUnits = units
+      runHasNl = nl
+      inTabSpace = tabSpace
     }
 
     def result: Int = length - trailingWs // pending ws run never counts at EOF

@@ -140,13 +140,13 @@ object Extractor {
     var weight = 0
     val cls = e.attr("class")
     if (cls != null && cls.nonEmpty) {
-      if (Regexes.search(Regexes.negative, cls)) weight -= 25
-      if (Regexes.search(Regexes.positive, cls)) weight += 25
+      if (Regexes.negative.find(cls)) weight -= 25
+      if (Regexes.positive.find(cls)) weight += 25
     }
     val id = e.attr("id")
     if (id != null && id.nonEmpty) {
-      if (Regexes.search(Regexes.negative, id)) weight -= 25
-      if (Regexes.search(Regexes.positive, id)) weight += 25
+      if (Regexes.negative.find(id)) weight -= 25
+      if (Regexes.positive.find(id)) weight += 25
     }
     weight
   }
@@ -174,15 +174,23 @@ object Extractor {
       p: Int, img: Int, li: Int, a: Int, embed: Int, input: Int)
 
   def subtreeStats(elem: Node): SubtreeStats = {
+    val w = new StatsWalk
+    w.walk(elem)
+    SubtreeStats(w.root.result, w.linkLen, w.nP, w.nImg, w.nLi, w.nA, w.nEmbed, w.nInput)
+  }
+
+  private final class StatsWalk {
     val root = new Cleaners.CleanLengthCounter
-    val active = new mutable.ArrayBuffer[Cleaners.CleanLengthCounter](2)
-    var linkLen = 0
-    var nP = 0; var nImg = 0; var nLi = 0; var nA = 0; var nEmbed = 0; var nInput = 0
-    def feed(s: String): Unit = {
+    // counters of the anchors open at the current node, innermost last
+    private val active = new mutable.ArrayBuffer[Cleaners.CleanLengthCounter](2)
+    var linkLen, nP, nImg, nLi, nA, nEmbed, nInput = 0
+
+    private def feed(s: String): Unit = {
       root.accept(s)
       var i = 0
       while (i < active.length) { active(i).accept(s); i += 1 }
     }
+
     def walk(n: Node): Unit = {
       if (n.isElement && n.text != null) feed(n.text)
       var i = 0
@@ -210,8 +218,6 @@ object Extractor {
         i += 1
       }
     }
-    walk(elem)
-    SubtreeStats(root.result, linkLen, nP, nImg, nLi, nA, nEmbed, nInput)
   }
 
   /** `get_link_density` (readability.py:381-388) — single pass. */
@@ -228,7 +234,10 @@ object Extractor {
     * the current element makes iteration descend into the *detached*
     * subtree and terminate at its end (the detached root has no parent to
     * walk up through). A dropped childless element does not disturb
-    * iteration. This quirk shaped the golden fixtures and is preserved. */
+    * iteration. This quirk shaped the golden fixtures and is preserved.
+    *
+    * The reference matches `class + " " + id`; no literal of either word
+    * list contains a space, so testing the two strings apart is exact. */
   def removeUnlikelyCandidates(doc: Node): Unit = {
     def nextOf(top: Node, n: Node): Node = {
       if (n.children.nonEmpty) return n.children(0)
@@ -236,19 +245,22 @@ object Extractor {
       while (c != null && !(c eq top)) {
         val p = c.parent
         if (p == null) return null
-        val i = p.children.indexOf(c)
+        val i = p.indexOf(c)
         if (i >= 0 && i + 1 < p.children.length) return p.children(i + 1)
         c = p
       }
       null
     }
+    def either(set: Regexes.LiteralSet, cls: String, id: String): Boolean =
+      (cls != null && set.find(cls)) || (id != null && set.find(id))
     var current: Node = doc
     while (current != null) {
       val nxt = nextOf(doc, current)
-      if (current.isElement) {
-        val s = current.attrOr("class", "") + " " + current.attrOr("id", "")
-        if (Regexes.search(Regexes.unlikelyCandidates, s) &&
-          !Regexes.search(Regexes.okMaybeItsACandidate, s) &&
+      if (current.isElement && current.hasAttrs) {
+        val cls = current.attr("class")
+        val id = current.attr("id")
+        if (either(Regexes.unlikelyCandidates, cls, id) &&
+          !either(Regexes.okMaybeItsACandidate, cls, id) &&
           current.tag != "body" &&
           current.parent != null) {
           current.dropTree()
@@ -269,43 +281,58 @@ object Extractor {
   def splitIntoParts(elem: Node): mutable.ArrayBuffer[Part] = {
     val parts = new mutable.ArrayBuffer[Part]
     if (elem.text != null) { parts += Left(elem.text); elem.text = null }
-    elem.children.foreach { child =>
+    var i = 0
+    while (i < elem.children.length) {
+      val child = elem.children(i)
       parts += Right(child)
       if (child.tail != null) { parts += Left(child.tail); child.tail = null }
+      i += 1
     }
     parts
   }
 
   /** `mark_if_whitespace` (readability.py:168-191). */
-  def markIfWhitespace(parts: collection.Seq[Part], left: Int, right: Int): Set[Int] = {
-    var onlyWs = true
+  def markIfWhitespace(parts: collection.Seq[Part], left: Int, right: Int): Set[Int] =
+    if (onlyWhitespaceBetween(parts, left, right)) (left + 1 until right).toSet else Set.empty
+
+  private def onlyWhitespaceBetween(parts: collection.Seq[Part], left: Int, right: Int): Boolean = {
     var i = left + 1
-    while (onlyWs && i < right) {
+    while (i < right) {
       parts(i) match {
-        case Left(s) => if (Cleaners.strip(s).nonEmpty) onlyWs = false
-        case Right(_) => onlyWs = false
+        case Left(s) => if (Cleaners.strip(s).nonEmpty) return false
+        case Right(_) => return false
       }
       i += 1
     }
-    if (onlyWs) (left + 1 until right).toSet else Set.empty
+    true
   }
 
-  /** `squeeze_breaks` (readability.py:193-225). */
+  private def isBr(p: Part): Boolean = p match {
+    case Right(n) => n.tag == "br"
+    case _ => false
+  }
+
+  /** `squeeze_breaks` (readability.py:193-225): between two consecutive
+    * `<br>`s, whitespace-only strings are dropped. */
   def squeezeBreaks(parts: mutable.ArrayBuffer[Part]): mutable.ArrayBuffer[Part] = {
-    val breaks = parts.zipWithIndex.collect {
-      case (Right(n), i) if n.tag == "br" => i
-    }
+    val marked = new java.util.BitSet(parts.length)
     var leftBreak = -1
-    val marked = mutable.Set.empty[Int]
-    breaks.foreach { b =>
-      if (leftBreak < 0) leftBreak = b
-      else {
-        marked ++= markIfWhitespace(parts, leftBreak, b)
-        leftBreak = b
+    var i = 0
+    while (i < parts.length) {
+      if (isBr(parts(i))) {
+        if (leftBreak >= 0 && onlyWhitespaceBetween(parts, leftBreak, i))
+          marked.set(leftBreak + 1, i)
+        leftBreak = i
       }
+      i += 1
     }
+    if (marked.isEmpty) return parts
     val out = new mutable.ArrayBuffer[Part](parts.length)
-    parts.zipWithIndex.foreach { case (p, i) => if (!marked.contains(i)) out += p }
+    i = 0
+    while (i < parts.length) {
+      if (!marked.get(i)) out += parts(i)
+      i += 1
+    }
     out
   }
 
@@ -315,19 +342,25 @@ object Extractor {
   def makeParagraphFromParts(parts: collection.Seq[Part]): Node = {
     val p = new Node("p")
     var lastElement: Node = null
-    parts.foreach {
-      case Left(s) =>
-        if (lastElement == null) p.text = (if (p.text == null) "" else p.text) + s
-        else lastElement.tail = (if (lastElement.tail == null) "" else lastElement.tail) + s
-      case Right(n) =>
-        p.append(n)
-        lastElement = n
+    var i = 0
+    while (i < parts.length) {
+      parts(i) match {
+        case Left(s) =>
+          if (lastElement == null) p.text = if (p.text == null) s else p.text + s
+          else lastElement.tail = if (lastElement.tail == null) s else lastElement.tail + s
+        case Right(n) =>
+          p.append(n)
+          lastElement = n
+      }
+      i += 1
     }
     if ((p.text == null || Cleaners.strip(p.text).isEmpty) && p.children.isEmpty) null
     else p
   }
 
+  // no parts make no paragraph, so an empty `parts` skips the build
   private def insertP(parent: Node, atElem: Node, parts: mutable.ArrayBuffer[Part]): Unit = {
+    if (parts.isEmpty) return
     val p = makeParagraphFromParts(parts)
     if (p != null) {
       val index = parent.indexOf(atElem)
@@ -337,24 +370,31 @@ object Extractor {
   }
 
   private def appendP(parent: Node, parts: mutable.ArrayBuffer[Part]): Unit = {
+    if (parts.isEmpty) return
     val p = makeParagraphFromParts(parts)
     if (p != null) parent.append(p)
     parts.clear()
   }
 
-  private val doubleBreakBlockTags: Set[String] =
-    Set("h1", "h2", "h3", "h4", "h5", "h6", "blockquote", "div", "img", "p",
-      "pre", "table")
+  private val doubleBreakBlockTags = new java.util.HashSet(java.util.Arrays.asList(
+    "h1", "h2", "h3", "h4", "h5", "h6", "blockquote", "div", "img", "p",
+    "pre", "table"))
 
   /** `transform_double_breaks_into_paragraphs_elem` — the 2-state FSM
-    * (readability.py:250-308). */
+    * (readability.py:250-308). An element with no text and only block
+    * children without tails is left as it is by the FSM, so it is
+    * skipped. */
   def transformDoubleBreaksElem(elem: Node): Unit = {
+    if (elem.text == null && onlyBlockChildren(elem)) return
     val START = 0; val BR = 1
     var state = START
     var firstBr: Node = null
     val acc = new mutable.ArrayBuffer[Part]
     val parts = squeezeBreaks(splitIntoParts(elem))
-    parts.foreach { part =>
+    var i = 0
+    while (i < parts.length) {
+      val part = parts(i)
+      i += 1
       if (state == START) {
         part match {
           case Left(s) => acc += Left(s)
@@ -386,6 +426,16 @@ object Extractor {
       }
     }
     appendP(elem, acc)
+  }
+
+  private def onlyBlockChildren(elem: Node): Boolean = {
+    var i = 0
+    while (i < elem.children.length) {
+      val c = elem.children(i)
+      if (c.tail != null || !doubleBreakBlockTags.contains(c.tag)) return false
+      i += 1
+    }
+    true
   }
 
   /** `transform_double_breaks_into_paragraphs` (readability.py:310-359) —
@@ -432,10 +482,18 @@ object Extractor {
         tagHit == java.lang.Boolean.TRUE ||
           (Serializer.isRawText(n.tag) && n.text != null &&
             Regexes.search(Regexes.divToPElements, n.text)) ||
-          n.children.exists(matches)
+          anyChild(n)
       }
     }
-    elem.children.exists(matches)
+    def anyChild(n: Node): Boolean = {
+      var i = 0
+      while (i < n.children.length) {
+        if (matches(n.children(i))) return true
+        i += 1
+      }
+      false
+    }
+    anyChild(elem)
   }
 
   // ---------- A3/A4: score_paragraphs ----------
@@ -449,7 +507,9 @@ object Extractor {
     val candidates = mutable.LinkedHashMap.empty[Node, Double]
     val contributing = new mutable.ArrayBuffer[Node]
 
-    for (tag <- Seq("p", "pre", "td"); elem <- doc.findAll(tag)) {
+    // one walk for the three findall passes: scoring reads the tree
+    // without changing it
+    for (elems <- doc.findAllByTag(scoredTags); elem <- elems) {
       val parentNode = elem.parent
       if (parentNode != null) {
         val grandParent = parentNode.parent
@@ -486,6 +546,8 @@ object Extractor {
     }
     candidates
   }
+
+  private val scoredTags = Array("p", "pre", "td")
 
   private def countCommas(s: String): Int = {
     var c = 0
@@ -559,22 +621,26 @@ object Extractor {
     *     one non-empty sibling per direction;
     *   - the parent-score reassignment at readability.py:488-493 being dead
     *     (only feeds logging).
+    *
+    * Each group of tags is collected in one walk instead of one `findall`
+    * per tag, so a node inside a subtree an earlier tag of its group
+    * dropped is still visited; it is detached by then, so whatever is
+    * decided for it changes only that detached subtree, never the output.
     */
   def sanitize(node: Node, candidates: mutable.LinkedHashMap[Node, Double],
       opts: ExtractOptions): String = {
-    for (tag <- Seq("h1", "h2", "h3", "h4", "h5", "h6");
-         header <- node.findAll(tag)) {
+    for (headers <- node.findAllByTag(headerTags); header <- headers) {
       if (classWeight(header) < 0 || linkDensity(header) > 0.33)
         header.dropTree()
     }
-    for (tag <- Seq("form", "iframe", "textarea"); el <- node.findAll(tag))
+    for (els <- node.findAllByTag(formTags); el <- els)
       el.dropTree()
 
     val allowed = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[Node, java.lang.Boolean]())
 
-    for (tag <- Seq("table", "ul", "div");
-         el <- node.findAll(tag).reverseIterator) {
+    val blocks = node.findAllByTag(blockTags)
+    for (g <- blockTags.indices; tag = blockTags(g); el <- blocks(g).reverseIterator) {
       if (!allowed.contains(el)) {
         val weight = classWeight(el)
         val contentScore = candidates.getOrElse(el, 0.0)
@@ -630,6 +696,10 @@ object Extractor {
     Cleaners2.cleanAttributesString(serialized)
   }
 
+  private val headerTags = Array("h1", "h2", "h3", "h4", "h5", "h6")
+  private val formTags = Array("form", "iframe", "textarea")
+  private val blockTags = Array("table", "ul", "div")
+
   /** Python 2 `/` on ints floors toward negative infinity. */
   private def floorDiv(a: Int, b: Int): Int = Math.floorDiv(a, b)
 
@@ -643,12 +713,7 @@ object Extractor {
     try {
       var ruthless = true
       while (true) {
-        doc.findAll("script").foreach(_.dropTree())
-        doc.findAll("style").foreach(_.dropTree())
-        doc.findAll("body").foreach(_.setAttr("id", "readabilityBody"))
-        if (ruthless) removeUnlikelyCandidates(doc)
-        transformDoubleBreaks(doc)
-        transformMisusedDivs(doc)
+        preprocess(doc, ruthless)
         val candidates = scoreParagraphs(doc)
         val best = selectBestCandidate(candidates)
         if (best == null) {
@@ -678,6 +743,23 @@ object Extractor {
       case scala.util.control.NonFatal(e) => throw new UnparseableException(String.valueOf(e))
     }
   }
+
+  /** The passes of each [[getArticle]] round before scoring: drop scripts
+    * and styles, mark the body, the ruthless unlikely-candidate removal,
+    * and the two paragraph transforms. Scripts, styles and bodies are found in
+    * one walk; one inside a script or style dropped just before is then
+    * detached, so dropping or marking it changes nothing. */
+  private def preprocess(doc: Node, ruthless: Boolean): Unit = {
+    val Array(scripts, styles, bodies) = doc.findAllByTag(preTags)
+    scripts.foreach(_.dropTree())
+    styles.foreach(_.dropTree())
+    bodies.foreach(_.setAttr("id", "readabilityBody"))
+    if (ruthless) removeUnlikelyCandidates(doc)
+    transformDoubleBreaks(doc)
+    transformMisusedDivs(doc)
+  }
+
+  private val preTags = Array("script", "style", "body")
 
   // ---------- debug helpers (F9 describe, T2 top-5 slice) ----------
 
@@ -713,12 +795,7 @@ object Extractor {
   def debugCandidates(html: String, opts: ExtractOptions = ExtractOptions(),
       n: Int = 5): Seq[(String, Double)] = {
     val doc = parse(html, opts.url)
-    doc.findAll("script").foreach(_.dropTree())
-    doc.findAll("style").foreach(_.dropTree())
-    doc.findAll("body").foreach(_.setAttr("id", "readabilityBody"))
-    removeUnlikelyCandidates(doc)
-    transformDoubleBreaks(doc)
-    transformMisusedDivs(doc)
+    preprocess(doc, ruthless = true)
     scoreParagraphs(doc).toSeq.sortBy { case (_, s) => -s }.take(n)
       .map { case (e, s) => (describe(e, depth = 1), s) }
   }
@@ -733,31 +810,41 @@ object Extractor {
     * the era the goldens were generated in — and is the behavior a
     * training-data pipeline wants (no word-joins across paragraphs). The
     * SAME function must normalize the golden fixture side. */
-  private val inlineTags: Set[String] = Set(
+  private val inlineTags: java.util.HashSet[String] = new java.util.HashSet(java.util.Arrays.asList(
     "a", "abbr", "acronym", "b", "bdi", "bdo", "big", "cite", "code", "data",
     "del", "dfn", "em", "font", "i", "ins", "kbd", "label", "mark", "nobr",
     "q", "rb", "rp", "rt", "ruby", "s", "samp", "small", "span", "strike",
-    "strong", "sub", "sup", "time", "tt", "u", "var", "wbr", "img")
+    "strong", "sub", "sup", "time", "tt", "u", "var", "wbr", "img"))
 
   /** Normalized extracted text (whitespace runs collapsed, block-boundary
     * separators) with, for each top-level block of the article, its
     * (start, end) character span — the engine's span addition (north star;
     * FIXTURES.md §4). */
   def extractTextAndSpans(article: Node): (String, Array[(Int, Int)]) = {
-    val sb = new java.lang.StringBuilder
+    val sb = new java.lang.StringBuilder(1024)
     var pendingSpace = false
     def boundary(): Unit = { if (sb.length > 0) pendingSpace = true }
+    // a string already in normal form is appended whole, else each
+    // maximal non-space run in one call
     def add(s: String): Unit = {
       if (s == null) return
+      if (isNormalized(s)) {
+        if (pendingSpace) { sb.append(' '); pendingSpace = false }
+        sb.append(s)
+        return
+      }
       var i = 0
       while (i < s.length) {
-        val c = s.charAt(i)
-        if (Cleaners.pyIsSpace(c)) { if (sb.length > 0) pendingSpace = true }
-        else {
+        if (Cleaners.pyIsSpace(s.charAt(i))) {
+          if (sb.length > 0) pendingSpace = true
+          i += 1
+        } else {
+          var j = i + 1
+          while (j < s.length && !Cleaners.pyIsSpace(s.charAt(j))) j += 1
           if (pendingSpace) { sb.append(' '); pendingSpace = false }
-          sb.append(c)
+          sb.append(s, i, j)
+          i = j
         }
-        i += 1
       }
     }
     def walk(n: Node): Unit = {
@@ -765,22 +852,46 @@ object Extractor {
       val isBlock = !inlineTags.contains(n.tag)
       if (isBlock) boundary()
       if (n.text != null) add(n.text)
-      n.children.foreach { c =>
+      var i = 0
+      while (i < n.children.length) {
+        val c = n.children(i)
         walk(c)
         if (c.tail != null) add(c.tail)
+        i += 1
       }
       if (isBlock) boundary()
     }
     val spans = new mutable.ArrayBuffer[(Int, Int)]
     if (article.isElement && article.text != null) add(article.text)
-    article.children.foreach { c =>
+    var i = 0
+    while (i < article.children.length) {
+      val c = article.children(i)
       val start0 = sb.length + (if (pendingSpace) 1 else 0)
       walk(c)
       val end = sb.length
       if (end > start0) spans += ((start0, end))
       if (c.tail != null) add(c.tail)
+      i += 1
     }
     (sb.toString, spans.toArray)
+  }
+
+  /** No whitespace at either end and only single `' '`s inside: the form
+    * [[extractTextAndSpans]] would give the string anyway. */
+  private def isNormalized(s: String): Boolean = {
+    var prevSpace = true // so that a leading space, or "", fails
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c > ' ' && c <= '~') prevSpace = false
+      else if (c == ' ') {
+        if (prevSpace) return false
+        prevSpace = true
+      } else if (Cleaners.pyIsSpace(c)) return false
+      else prevSpace = false
+      i += 1
+    }
+    !prevSpace
   }
 
   /** The normalized text of any fragment under the same rules as
@@ -840,7 +951,44 @@ object Cleaners2 {
       ">",
     java.util.regex.Pattern.CASE_INSENSITIVE)
 
+  /** Exact prefilter: the pattern can only match at an `=` reached from
+    * ` *` and a maximal `[-A-Za-z]` run that has a space before it and is
+    * one of the alternation's names; without such an `=` the input comes
+    * back unchanged and the regex loop is skipped. */
+  private def mayMatch(html: String): Boolean = {
+    var e = html.indexOf('=')
+    while (e >= 0) {
+      var j = e - 1
+      while (j >= 0 && html.charAt(j) == ' ') j -= 1
+      var r = j
+      while (r >= 0 && isNameChar(html.charAt(r))) r -= 1
+      if (r < j && r >= 0 && html.charAt(r) == ' ' && isStrippedName(html, r + 1, j + 1))
+        return true
+      e = html.indexOf('=', e + 1)
+    }
+    false
+  }
+
+  @inline private def isNameChar(c: Char): Boolean =
+    (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || c == '-'
+
+  /** `width|height|style|[-a-z]*color|background[-a-z]*|on*`, ASCII case
+    * folded, over the whole name `html[from, to)` (all name chars). */
+  private def isStrippedName(html: String, from: Int, to: Int): Boolean = {
+    def is(word: String, at: Int): Boolean = html.regionMatches(true, at, word, 0, word.length)
+    val n = to - from
+    (n == 5 && (is("width", from) || is("style", from))) ||
+      (n == 6 && is("height", from)) ||
+      (n >= 5 && is("color", to - 5)) ||
+      (n >= 10 && is("background", from)) || {
+        var k = from + 1
+        while (k < to && (html.charAt(k) | 0x20) == 'n') k += 1
+        (html.charAt(from) | 0x20) == 'o' && k == to
+      }
+  }
+
   def cleanAttributesString(html: String): String = {
+    if (!mayMatch(html)) return html
     var h = html
     var m = htmlstrip.matcher(h)
     while (m.find()) {

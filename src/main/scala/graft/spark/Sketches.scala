@@ -140,14 +140,20 @@ object Sketches {
     * candidates exactly (a semi-join-restricted aggregate — cheap
     * because the candidate set is tiny by construction). The verdict
     * column `is_true_heavy` exposes the sketch's false positives
-    * instead of hiding them.
+    * instead of hiding them. `depth` × `width` is capped at 65,536
+    * cells: the corpus total is a window over the whole matrix in one
+    * partition.
     *
     * Emits (word, cms_est, exact_cnt, is_true_heavy). */
   def cmsHeavyHitters(spark: SparkSession, sfDir: String,
       depth: Int = 4, width: Int = 512, heavyDenom: Int = 64): DataFrame = {
     import spark.implicits._
-    require(depth >= 1 && depth <= 16 && width >= 16 && width <= (1 << 20),
-      "sketch dimensions must stay a bounded broadcastable state")
+    // the `total` window below has no partitionBy, so the whole d·w
+    // counter matrix lands in ONE task: bound it to what one task holds
+    // comfortably (the defaults use 2,048 of the 65,536 cells)
+    require(depth >= 1 && depth <= 16 && width >= 16 && depth.toLong * width <= (1L << 16),
+      s"sketch dimensions $depth x $width: need depth 1..16, width >= 16 and at most " +
+        "65,536 cells, the single-partition window's bound")
     val seeds = Array.tabulate(depth)(r => Hash61.mix(1000L + r))
     val words = TableIO.rebalanceSmall(TableIO(spark, sfDir).read("documents")
       .select("text").as[String])
@@ -178,6 +184,8 @@ object Sketches {
       val h = Hash61.wordHash(w)
       (0 until depth).iterator.map(r => (w, r, (Hash61.mix(h ^ seeds(r)) % width).toInt))
     }.toDF("word", "r", "col")
+    // `total` is frame-constant (one value on every counter row), so
+    // max() only carries it through the aggregate
     val est = probes.join(countersT, Seq("r", "col"))
       .groupBy("word").agg(min(col("c")).as("cms_est"), max(col("total")).as("total"))
     val cand = est.where(col("cms_est") * heavyDenom >= col("total"))

@@ -88,4 +88,12 @@ class SketchSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(trueHeavy.subsetOf(flagged),
       s"sketch missed true heavy hitters: ${trueHeavy -- flagged}")
   }
+
+  test("CMS rejects a counter matrix its single-partition total window cannot hold") {
+    Seq((16, 1 << 20), (16, 8192), (2, Int.MaxValue)).foreach { case (d, w) =>
+      val e = intercept[IllegalArgumentException](Sketches.cmsHeavyHitters(spark, sfDir, d, w))
+      assert(e.getMessage.contains("65,536 cells"))
+    }
+    Sketches.cmsHeavyHitters(spark, sfDir, 16, 4096) // exactly at the bound: plans
+  }
 }
