@@ -47,12 +47,8 @@ object CurationScaling {
 
     // stage the multiplied corpus ONCE (input generation is not the
     // operator under measurement); RAM-backed when available — disk is
-    // the noisiest shared resource in this sandbox (Bench.session
-    // rationale)
-    val base = if (new java.io.File("/dev/shm").isDirectory)
-      java.nio.file.Paths.get("/dev/shm") else
-      java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val staged = java.nio.file.Files.createTempDirectory(base, "curscale").toString
+    // the noisiest shared resource in this sandbox (Scratch rationale)
+    val staged = graft.spark.Scratch.dir("curscale").toString
     locally {
       val s = Bench.session((4 * n).toString)
       multiplied(s, sfDir, mult).toDF("doc_id", "text")

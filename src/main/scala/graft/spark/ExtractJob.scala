@@ -8,15 +8,16 @@ import org.apache.spark.util.CollectionAccumulator
 import scala.collection.mutable
 
 /** The Spark-native extraction pipeline (SURVEY.md §3 "Spark lifecycle
-  * equivalent"):
+  * equivalent"), as one plan:
   *
   *   scan (column-pruned to conv_id/turn_idx/text) →
   *   explicit bucketing on hash(conv_id) with turn-level salting for
   *   skewed long conversations →
-  *   one `mapPartitions` hot path (batched per-partition DOM tokenize +
-  *   node-classify: the whole readability pipeline, node-local, zero
-  *   shuffle after the bucketing exchange) →
-  *   extracted turns + per-partition lineage rows.
+  *   partition-local sort by (conv_id, turn_idx) →
+  *   the extraction operator [[ExtractTurnsExec]] (the whole readability
+  *   pipeline, node-local, zero shuffle after the bucketing exchange),
+  *   which also keeps the per-bucket lineage →
+  *   extracted turns + per-bucket lineage rows.
   *
   * Scale notes (10^12 turns, 1000 executors):
   *  - extraction is per-turn independent ⇒ salting is safe and the single
@@ -52,6 +53,8 @@ object ExtractJob {
     * over at most `salt` buckets, each still sorted by turn_idx within. */
   def saltFor(numBuckets: Int): Int = math.max(1, numBuckets / 8)
 
+  /** One turn through the kernel, for typed queries that extract inside
+    * their own lambdas; bulk extraction goes through [[run]]. */
   def extractTurn(t: Turn, opts: ExtractOptions): ExtractedTurn = {
     val s = Extractor.extract(t.text, opts)
     ExtractedTurn(t.conv_id, t.turn_idx, s.confidence,
@@ -66,23 +69,11 @@ object ExtractJob {
     pmod(hash(col("conv_id"), pmod(col("turn_idx"), lit(salt))), lit(numBuckets))
   }
 
-  /** A turn tagged with its stable data-level bucket. */
-  final case class BucketedTurn(bucket: Int, conv_id: String, turn_idx: Int,
-      role: String, text: String, tool: String, ts: java.sql.Timestamp)
-
-  private final class BucketStats {
-    var nOk = 0L
-    var nFail = 0L
-    var nEmpty = 0L
-    val hist = new Array[Long](HistogramBins)
-    val t0: Long = System.nanoTime()
-  }
-
-  /** Core distributed extraction: bucket + salt, then one mapPartitions.
-    * Output is sorted within partitions by (conv_id, turn_idx) — stable
-    * turn ordering per the north rule. Lineage is tracked per data-level
-    * bucket (a partition may host several buckets after the hash
-    * exchange). */
+  /** Core distributed extraction: bucket + salt, one exchange on the
+    * bucket, then the extraction operator. Output is sorted within
+    * partitions by (conv_id, turn_idx) — stable turn ordering per the
+    * north rule. Lineage is tracked per data-level bucket (a partition may
+    * host several buckets after the hash exchange). */
   def run(spark: SparkSession, turns: Dataset[Turn], numBuckets: Int,
       fingerprint: String = "local"): Result =
     runImpl(spark, turns, numBuckets, fingerprint, exchange = true)
@@ -100,50 +91,14 @@ object ExtractJob {
   private def runImpl(spark: SparkSession, turns: Dataset[Turn], numBuckets: Int,
       fingerprint: String, exchange: Boolean): Result = {
     import spark.implicits._
-    val tagged = turns
-      .withColumn("bucket", bucketCol(numBuckets))
-      .select("bucket", "conv_id", "turn_idx", "role", "text", "tool", "ts")
-      .as[BucketedTurn]
+    val tagged = turns.select(bucketCol(numBuckets).as("bucket"),
+      col("conv_id"), col("turn_idx"), col("text"))
     val bucketed =
       (if (exchange) tagged.repartition(numBuckets, col("bucket")) else tagged)
         .sortWithinPartitions("conv_id", "turn_idx")
-
-    val acc: CollectionAccumulator[LineageRow] =
-      spark.sparkContext.collectionAccumulator[LineageRow]("graft.lineage")
-    val opts = ExtractOptions()
-
-    val extracted = bucketed.mapPartitions { it =>
-      val stats = mutable.LongMap.empty[BucketStats]
-      var pending = true
-      val out = it.map { bt =>
-        val t = Turn(bt.conv_id, bt.turn_idx, bt.role, bt.text, bt.tool, bt.ts)
-        val r = extractTurn(t, opts)
-        val s = stats.getOrElseUpdate(bt.bucket.toLong, new BucketStats)
-        if (r.failed) s.nFail += 1
-        else if (r.extracted_html == null) s.nEmpty += 1
-        else {
-          s.nOk += 1
-          val bin = math.min(math.max((r.confidence / 10).toInt, 0), HistogramBins - 1)
-          s.hist(bin) += 1
-        }
-        r
-      }
-      new Iterator[ExtractedTurn] {
-        def hasNext: Boolean = {
-          val h = out.hasNext
-          if (!h && pending) {
-            stats.foreach { case (bucket, s) =>
-              acc.add(LineageRow(fingerprint, bucket.toInt, s.nOk, s.nFail,
-                s.nEmpty, s.hist, (System.nanoTime() - s.t0) / 1000000L))
-            }
-            pending = false
-          }
-          h
-        }
-        def next(): ExtractedTurn = out.next()
-      }
-    }
-    new Result(extracted, acc)
+    val sink = LineageSink(fingerprint,
+      spark.sparkContext.collectionAccumulator[LineageRow]("graft.lineage"))
+    new Result(GraftOps.extractTurns(bucketed, Some(sink)).as[ExtractedTurn], sink.acc)
   }
 
   // ---------- resumable run (north rule: snapshot checkpoints) ----------

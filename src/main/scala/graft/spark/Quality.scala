@@ -133,6 +133,10 @@ object Quality {
           Ipv4Re, "<IP>").as("scrubbed"))
   }
 
+  /** Most distinct eval shingles the exact face broadcasts (8 B each as
+    * bare hashes, ~100 B each in the driver's `Set`). */
+  val ExactEvalShingleCap: Int = 1 << 18
+
   /** Benchmark decontamination (the GPT-3 §C / standard eval-overlap
     * filter): flag corpus documents sharing ≥ `threshold` distinct
     * `nWords`-gram shingles with the benchmark set (here: doc_id <
@@ -146,9 +150,9 @@ object Quality {
     *
     * Scale shape: the eval suite is tiny next to the corpus, so its
     * shingle set broadcasts and the corpus pass is ROW-LOCAL — no join,
-    * no shuffle at any corpus size. (At eval sets too big for an exact
-    * broadcast set, swap the Set for a Bloom filter behind the same
-    * contains seam; the threshold then needs a false-positive margin.) */
+    * no shuffle at any corpus size. An eval set with more than
+    * [[ExactEvalShingleCap]] shingles is refused: [[decontaminateBloom]]
+    * is the face for it. */
   def decontaminate(spark: SparkSession, sfDir: String,
       nWords: Int = 8, threshold: Int = 3, evalSetSize: Int = 50,
       spanWords: Int = 12): DataFrame = {
@@ -174,10 +178,16 @@ object Quality {
     // executor if the corpus is missing one (ADVICE r4, substringSpans)
     require(evalSpans.size == evalSetSize,
       s"decontaminate plant needs doc_ids 0..${evalSetSize - 1}; found ${evalSpans.size}")
+    // the exact set is broadcast whole: refuse an eval suite that outgrows
+    // it, having collected at most one shingle past the cap
     val evalShingles: Set[Long] = evalRows
       .select("doc_id", "text").as[(Long, String)]
       .flatMap { case (_, t) => shingleSet(splitWords(t), nWords).iterator }
-      .distinct().collect().toSet
+      .distinct().limit(ExactEvalShingleCap + 1).collect().toSet
+    require(evalShingles.size <= ExactEvalShingleCap,
+      s"decontaminate: the eval set has more than $ExactEvalShingleCap distinct " +
+        s"$nWords-gram shingles, too many to broadcast exactly; use " +
+        "decontaminateBloom (query decontaminate_bloom), whose filter is fixed-size")
     val bcSpans = spark.sparkContext.broadcast(evalSpans)
     val bcSet = spark.sparkContext.broadcast(evalShingles)
 

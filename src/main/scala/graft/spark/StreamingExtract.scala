@@ -1,25 +1,24 @@
 package graft.spark
 
-import graft.extract.ExtractOptions
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.DataStreamReader
 
 /** Structured Streaming face of the extraction stage. The reference and
   * the north rule are batch-first (resumable snapshot checkpoints, not
   * watermarks — SURVEY.md §2l), but the extraction operator itself is
-  * stateless per turn, so the streaming form is the same typed map over a
-  * `readStream` source: no state store, no watermark, exactly-once via
-  * sink checkpointing. Useful for incremental ingestion of new
-  * transcript partitions.
+  * stateless per turn, so the streaming form plans the batch path's
+  * operator ([[ExtractTurnsExec]]) over a `readStream` source: no state
+  * store, no watermark, exactly-once via sink checkpointing. Useful for
+  * incremental ingestion of new transcript partitions. The replay
+  * harness below stages and checkpoints under [[Scratch]].
   */
 object StreamingExtract {
 
   /** Transform a streaming Dataset[Turn] into extracted turns — the same
-    * per-turn function as the batch hot path. */
+    * extraction operator as the batch path ([[GraftOps.extractTurns]]). */
   def extractStream(turns: Dataset[Turn]): Dataset[ExtractedTurn] = {
     import turns.sparkSession.implicits._
-    val opts = ExtractOptions()
-    turns.mapPartitions { it => it.map(t => ExtractJob.extractTurn(t, opts)) }
+    GraftOps.extractTurns(turns.toDF()).as[ExtractedTurn]
   }
 
   /** Streaming exact dedup: first-seen row per content digest, duplicate
@@ -70,19 +69,6 @@ object StreamingExtract {
     }.select(col("turn_idx").cast("long").as("doc_id"), col("extracted_text"))
   }
 
-  /** RAM-backed scratch root for replay staging + streaming checkpoints —
-    * same rationale as Bench's `spark.local.dir`: the sandbox's shared
-    * disk is the noisiest resource, a real cluster has provisioned
-    * scratch storage. Falls back to java.io.tmpdir. */
-  private[spark] def replayScratchRoot(): java.nio.file.Path = {
-    val shm = new java.io.File("/dev/shm")
-    val base =
-      if (shm.isDirectory && shm.canWrite) new java.io.File(shm, "graft-replay")
-      else new java.io.File(System.getProperty("java.io.tmpdir"))
-    base.mkdirs()
-    base.toPath
-  }
-
   /** Stage `classed` — which must carry an integer column `cls` in
     * [0, nClasses) — as ONE parquet file per class under a fresh temp
     * dir, with strictly increasing modification times, and return that
@@ -100,8 +86,7 @@ object StreamingExtract {
   def stageReplayFiles(classed: org.apache.spark.sql.DataFrame,
       nClasses: Int): String = {
     import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files.createTempDirectory(
-      replayScratchRoot(), "replay_stage_")
+    val root = Scratch.dir("replay_stage_")
     val stageDir = root.resolve("stage")
     classed.repartition(nClasses, col("cls"))
       .write.mode("overwrite").partitionBy("cls").parquet(stageDir.toString)
@@ -178,13 +163,7 @@ object StreamingExtract {
         spark.table(name)
       } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
     spark.catalog.dropTempView(name)
-    deleteRecursively(root.toFile)
+    Scratch.deleteRecursively(root.toFile)
     out
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val cs = f.listFiles()
-    if (cs != null) cs.foreach(deleteRecursively)
-    f.delete()
   }
 }

@@ -1,7 +1,8 @@
 package graft
 
-import graft.spark.{ExtractJob, TranscriptGen, Turn}
+import graft.spark.{ExtractJob, ExtractTurnsExec, TranscriptGen, Turn}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import graft.PlanTestUtil.finalPlan
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * plans (AQE) so a refactor that silently drops a pushdown, broadcasts
   * the wrong side, or adds a shuffle fails the build — not the cluster.
   */
-class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PlanSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSparkPlanHelper {
 
   private val sfDir = "/root/testdata/sf0.001"
   private var spark: SparkSession = _
@@ -27,6 +28,15 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
+
+  /** A typed extraction face runs the extraction operator itself: no
+    * encoder round-trip, and role/tool/ts never leave the scan. */
+  private def assertOperatorPlan(plan: String): Unit = {
+    assert(plan.contains("ExtractTurns ") && !plan.contains("!ExtractTurns"), plan)
+    assert(!plan.contains("DeserializeToObject") && !plan.contains("MapPartitions"),
+      "no typed encoder round-trip around the extraction\n" + plan)
+    assert(plan.contains("ReadSchema: struct<conv_id:string,turn_idx:int,text:string>"), plan)
+  }
 
   test("roundtrip scan: filter pushed to parquet, columns pruned, no keyed shuffle") {
     val plan = finalPlan(SparkEntry.queries("extract_roundtrip")(spark, sfDir))
@@ -90,6 +100,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // sort is partition-local (global=false) — no global ordering shuffle
     assert("Sort \\[conv_id[^\\]]+\\], false".r.findFirstIn(plan).isDefined,
       "expected partition-local sort\n" + plan)
+    assertOperatorPlan(plan)
   }
 
   test("pre-bucketed extraction (Iceberg shape): zero exchanges, same results") {
@@ -106,6 +117,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val pb = ExtractJob.runPreBucketed(spark, input, numBuckets = 8).extracted.toDF()
     val plan = finalPlan(pb)
     assert(!plan.contains("Exchange"), "pre-bucketed path must be map-only\n" + plan)
+    assertOperatorPlan(plan)
     // identical results to the exchange path
     val a = pb.select("conv_id", "turn_idx", "extracted_text")
       .as[(String, Int, String)].collect().sortBy(r => (r._1, r._2)).toSeq
@@ -140,6 +152,28 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // spans survive the InternalRow round-trip
     val spans = df.selectExpr("size(spans)").as[Int].collect()
     assert(spans.forall(_ > 0))
+  }
+
+  test("extraction operator SQL metrics equal the lineage sums") {
+    val s = spark
+    import s.implicits._
+    // a page nested past the stack depth the recursive DOM walks survive
+    // returns failed=true, so all three counters are exercised
+    val deep = "<html><body>" + "<div>" * 50000 + "<p>deep page</p>" +
+      "</div>" * 50000 + "</body></html>"
+    val turns = TranscriptGen.turns(spark, sfDir, 2).union(Seq(Turn("conv-deep", 0,
+      "assistant", deep, "", new java.sql.Timestamp(TranscriptGen.FixedEpochMs))).toDS())
+    val res = ExtractJob.run(spark, turns, numBuckets = 8)
+    val df = res.extracted.toDF()
+    df.collect()
+    val op = collectFirst(df.queryExecution.executedPlan) { case e: ExtractTurnsExec => e }
+    assert(op.isDefined, df.queryExecution.executedPlan.toString)
+    val m = op.get.metrics.map { case (k, v) => k -> v.value }
+    val lineage = res.lineageRows
+    assert(m("turns") == turns.count())
+    assert(m("turns") == lineage.map(r => r.extracted_turns + r.failed_turns + r.empty_turns).sum)
+    assert(m("failed") == lineage.map(_.failed_turns).sum && m("failed") == 1L, m)
+    assert(m("empty") == lineage.map(_.empty_turns).sum && m("empty") > 0L, m)
   }
 
   test("ANN brute force: query side broadcast, corpus side never shuffled") {

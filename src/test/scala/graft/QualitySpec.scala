@@ -113,6 +113,20 @@ class QualitySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(graft.PlanTestUtil.keyedExchanges(finalPlan(df)) == 0)
   }
 
+  test("exact decontamination refuses an eval set past its shingle cap, naming the Bloom face") {
+    val s = spark
+    import s.implicits._
+    // 50 eval docs of distinct words: every 8-gram is distinct, so the eval
+    // set holds 50 × (perDoc − 7) shingles, just past the cap
+    val perDoc = Quality.ExactEvalShingleCap / 50 + 64
+    val dir = java.nio.file.Files.createTempDirectory("decon-cap").toString
+    (0 until 50).map(d => (d.toLong, (0 until perDoc).map(i => s"w${d}x$i").mkString(" ")))
+      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    val e = intercept[IllegalArgumentException](Quality.decontaminate(spark, dir))
+    assert(e.getMessage.contains(s"more than ${Quality.ExactEvalShingleCap}") &&
+      e.getMessage.contains("decontaminate_bloom"), e.getMessage)
+  }
+
   test("bloom decontamination: superset of exact flags, planted spans caught, row-local corpus pass") {
     val s = spark
     import s.implicits._

@@ -41,6 +41,10 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     stream.addData(turns)
     q.processAllAvailable()
     q.stop()
+    // the micro-batch ran the batch path's extraction operator
+    val executed = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.lastExecution.executedPlan.toString
+    assert(executed.contains("ExtractTurns "), executed)
 
     val streamed = s.table("extracted_stream")
       .select("conv_id", "turn_idx", "extracted_text", "confidence")
